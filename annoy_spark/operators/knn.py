@@ -401,6 +401,10 @@ def knn_lsh(
         return knn_by_vector_approx(items, queries, cfg, k, id_col, vec_col)
 
     dim = len(items.select(vec_col).first()[0])
+    if dedup_first is None:
+        # count the input, not the repartitioned relation: same rows,
+        # no exchange to run for a count
+        dedup_first = items.count() > (1 << n_bits) * 2 * k
 
     # parallelism floor (guide §6.1): a small single-row-group parquet scan
     # yields ONE partition, serializing the key UDF + bucket explode that
@@ -422,11 +426,9 @@ def knn_lsh(
     # bucket rows and the narrow (qid, nid, distance) rows dedup AFTER
     # scoring (round-5 shape) — early dedup + re-attach joins are pure
     # overhead there. The switch derives from the data (count vs key
-    # space), never from a local-mode constant; the count is one cheap
-    # probe next to the existing dim probe.
-    if dedup_first is None:
-        n_items = items.count()
-        dedup_first = n_items > (1 << n_bits) * 2 * k
+    # space), never from a local-mode constant; the count (taken above,
+    # on the pre-repartition input) is one cheap probe next to the dim
+    # probe.
 
     if metric == "dot":
         raw = F.col(vec_col).cast("array<double>")

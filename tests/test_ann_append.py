@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from annoy_spark.operators.knn import knn_bruteforce
 from annoy_spark.sources.ann_index import (
+    _KIND_METRICS,
+    SMALL_QUERY_MAX,
     AnnIndexConfig,
     append_index,
     build_index,
@@ -246,23 +248,114 @@ def test_ivf_query_time_nprobe(spark, corpus, queries, tmp_path):
     )
 
 
-def test_large_batch_falls_back_to_shuffle(spark, corpus, tmp_path):
-    """The broadcast serving contract is now GUARDED: forcing the
-    large-batch path (small_queries=False) must produce the same rows as
-    the pinned broadcast plan, through shuffle joins instead of
-    broadcasts."""
-    cfg = AnnIndexConfig(kind="forest", n_trees=8, seed=42)
-    idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
-    qs = corpus.select(
+@pytest.fixture(scope="module")
+def hamming_corpus(spark):
+    """400 packed 128-bit signatures: 20 centers, each item a few random
+    bit flips away from its center."""
+    rng = np.random.default_rng(7)
+    centers = rng.integers(-(1 << 63), (1 << 63) - 1, (20, 2), dtype=np.int64)
+    rows = []
+    for i in range(400):
+        sig = centers[i % 20].copy()
+        for b in rng.integers(0, 128, 3):
+            sig[b // 64] ^= np.int64(1) << np.int64(b % 64)
+        rows.append((i, [int(x) for x in sig]))
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<long>"
+    ).cache()
+
+
+_ROUTING_CASES = [
+    pytest.param(kind, metric, {}, {}, id=f"{kind}-{metric}")
+    for kind, metrics in _KIND_METRICS.items()
+    for metric in metrics
+] + [
+    pytest.param("forest", "angular", {}, {"spill_eps": 0.1},
+                 id="forest-angular-spill_eps"),
+    pytest.param("forest", "hamming", {}, {"spill_eps": 2},
+                 id="forest-hamming-spill_levels"),
+    pytest.param("ivf", "euclidean", {}, {"nprobe": 8}, id="ivf-nprobe"),
+    pytest.param("forest", "angular", {"bucket_cap": 10}, {},
+                 id="forest-angular-oversized"),
+]
+
+
+@pytest.mark.parametrize("kind,metric,geometry,knobs", _ROUTING_CASES)
+def test_large_batch_falls_back_to_shuffle(
+    spark, corpus, hamming_corpus, tmp_path, kind, metric, geometry, knobs
+):
+    """The serving plan choice never changes an answer: a batch routed on
+    the driver and broadcast (small_queries=None decides so at this
+    size, True pins it) returns exactly the (qid, rank, nid, distance)
+    rows of the executor-routed shuffle plan (small_queries=False), for
+    every kind x metric, the query-time spill/nprobe knobs and buckets
+    past bucket_cap."""
+    items = hamming_corpus if metric == "hamming" else corpus
+    cfg = AnnIndexConfig(kind=kind, metric=metric, n_trees=8, seed=42,
+                         n_centroids=16, sample_fraction=1.0, **geometry)
+    idx = build_index(spark, items, str(tmp_path / "idx"), cfg)
+    assert idx._has_oversized == ("bucket_cap" in geometry)
+    qs = items.select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
     )
-    a = idx.query(qs, k=5, small_queries=True).collect()
-    b = idx.query(qs, k=5, small_queries=False).collect()
-    key = lambda r: (r.qid, r.rank)  # noqa: E731
-    assert sorted([(r.qid, r.nid, r.rank) for r in a]) == sorted(
-        [(r.qid, r.nid, r.rank) for r in b]
+    cols = ["qid", "rank", "nid", "distance"]
+    got = {
+        small: sorted(
+            tuple(r) for r in idx.query(qs, k=5, small_queries=small,
+                                        **knobs).select(cols).collect()
+        )
+        for small in (None, True, False)
+    }
+    assert got[None] == got[True] == got[False]
+    assert len(got[None]) > 0
+    if kind == "forest" and metric == "angular" and not geometry:
+        assert len(got[None]) == corpus.count() * 5
+
+
+def _plan_node_names(df) -> list[str]:
+    """Node names of df's executed physical plan, descending into AQE
+    query stages and reused exchanges (the AQE-final plan once df ran)."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif cls == "ReusedExchangeExec":
+            stack.append(node.child())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_small_batch_plan_runs_no_python_udf(spark, corpus, tmp_path):
+    """A warm query batch of at most SMALL_QUERY_MAX rows is routed on the
+    driver: its AQE-final physical plan has no Python eval node (the
+    batch arrives as a local relation). The executor-routed plan
+    (small_queries=False) still evaluates the routing UDF once."""
+    cfg = AnnIndexConfig(kind="forest", n_trees=8, seed=42)
+    idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
+    qs = corpus.where(F.col("vec_id") < 100).select(
+        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
     )
-    assert len(a) == corpus.count() * 5
+    assert qs.count() <= SMALL_QUERY_MAX
+    python_eval = {"ArrowEvalPython", "BatchEvalPython"}
+    idx.query(qs, k=5).collect()  # warm
+    small = idx.query(qs, k=5)
+    small.collect()
+    assert "isFinalPlan=true" in str(
+        small._jdf.queryExecution().executedPlan().toString()
+    )
+    names = _plan_node_names(small)
+    assert not python_eval & set(names), names
+    assert "LocalTableScan" in names
+    large = idx.query(qs, k=5, small_queries=False)
+    large.collect()
+    assert sum(n in python_eval for n in _plan_node_names(large)) == 1
 
 
 def test_load_rejects_old_format(spark, corpus, tmp_path):

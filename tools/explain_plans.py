@@ -90,8 +90,9 @@ def main() -> None:
                            sample_fraction=1.0))
 
     # persisted ANN index: by-vector query against STORED parquet
-    # artifacts — parquet scans of buckets/vectors, broadcast query
-    # routing, narrow (qid, nid) dedup before the vector re-attach
+    # artifacts — parquet scans of buckets/vectors, the query batch
+    # routed on the driver and broadcast as a local relation (no Python
+    # eval node), narrow (qid, nid) dedup before the vector re-attach
     import tempfile
 
     from annoy_spark.sources.ann_index import AnnIndexConfig, build_index
@@ -106,18 +107,20 @@ def main() -> None:
         (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
     )
     sections[
-        "ANN INDEX QUERY (stored bucket/vector parquet scans, broadcast "
-        "query routing + salt replication, narrow (qid,nid) dedup, "
-        "re-attach vectors, exact re-rank)"
+        "ANN INDEX QUERY (stored bucket/vector parquet scans, "
+        "driver-routed query batch broadcast as a local relation, "
+        "narrow (qid,nid) dedup, re-attach vectors, exact re-rank)"
     ] = plan_of(idx.query(queries, k=3, spill_eps=0.1,
                           small_queries=True))
 
-    # the guarded fallback: the SAME query above a large batch — the
-    # query-derived sides lose their broadcast hints and the joins
-    # degrade to shuffle equi-joins instead of a broadcast OOM
+    # the guarded fallback: the SAME query above a large batch — routing
+    # runs on the executors, the query-derived sides lose their broadcast
+    # hints and the joins degrade to shuffle equi-joins instead of a
+    # broadcast OOM
     sections[
         "ANN INDEX QUERY — LARGE-BATCH FALLBACK (small_queries=False: "
-        "no query-side broadcast hints; shuffle equi-joins; AQE decides "
+        "one ArrowEvalPython routing pass on the executors, no "
+        "query-side broadcast hints; shuffle equi-joins; AQE decides "
         "the candidate join from measured size)"
     ] = plan_of(idx.query(queries, k=3, spill_eps=0.1,
                           small_queries=False))
@@ -134,8 +137,9 @@ def main() -> None:
         (F.col("vec_id") + 5000).alias("vec_id"), "embedding"))
     cidx = compact_index(spark, idx_root)
     sections[
-        "ANN INDEX QUERY AFTER APPEND+COMPACT (same plan shape over the "
-        "consolidated bucket-sorted artifacts — compaction is layout-only)"
+        "ANN INDEX QUERY AFTER APPEND+COMPACT (same driver-routed plan "
+        "shape over the consolidated bucket-sorted artifacts — "
+        "compaction is layout-only)"
     ] = plan_of(cidx.query(queries, k=3, spill_eps=0.1,
                            small_queries=True))
 
