@@ -13,9 +13,10 @@ append to the sink exactly-once via the checkpoint.
 The index is loaded ONCE at query-stream start (the mmap analog: the
 model npz is driver-held; the bucket/vector parquet is re-scanned per
 micro-batch — an Iceberg table served from cluster cache in production).
-Micro-batches are query-batch-sized by contract, so each is routed on
-the driver and the per-batch plan is the broadcast shape audited in
-PLANS.md (stored relations streamed, routed query side built).
+Micro-batches are query-batch-sized by contract, so one of at most one
+Arrow batch is routed on the driver and the per-batch plan is the
+broadcast shape audited in PLANS.md (stored relations streamed, routed
+query side built).
 
 foreachBatch (not a streaming join) because the per-batch work is a
 full multi-join + window top-k over a BATCH relation — the exact pattern
@@ -64,11 +65,11 @@ def ann_query_stream(
     def answer_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        # each batch is collected once (at most SMALL_QUERY_MAX + 1
-        # rows): a steady-state online batch is routed on the driver and
-        # broadcast, a catch-up batch past SMALL_QUERY_MAX routes on the
-        # executors and falls back to shuffle equi-joins rather than a
-        # broadcast OOM
+        # probe each batch's size (one cheap limit-count): a steady-state
+        # online batch (at most one Arrow batch) is routed on the driver
+        # and broadcast, a larger one routes on the executors, and a
+        # catch-up batch past SMALL_QUERY_MAX falls back to shuffle
+        # equi-joins rather than a broadcast OOM
         result = idx.query(
             batch, k=k, id_col=id_col, vec_col=vec_col,
             spill_eps=spill_eps, small_queries=None,

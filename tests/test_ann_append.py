@@ -8,12 +8,12 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from annoy_spark.operators.knn import knn_bruteforce
 from annoy_spark.sources.ann_index import (
     _KIND_METRICS,
-    SMALL_QUERY_MAX,
     AnnIndexConfig,
     append_index,
     build_index,
@@ -333,17 +333,28 @@ def _plan_node_names(df) -> list[str]:
 
 
 def test_small_batch_plan_runs_no_python_udf(spark, corpus, tmp_path):
-    """A warm query batch of at most SMALL_QUERY_MAX rows is routed on the
-    driver: its AQE-final physical plan has no Python eval node (the
-    batch arrives as a local relation). The executor-routed plan
-    (small_queries=False) still evaluates the routing UDF once."""
+    """A warm query batch of at most one Arrow batch
+    (spark.sql.execution.arrow.maxRecordsPerBatch, the most rows an
+    executor routes in one kernel call) is routed on the driver: its
+    AQE-final physical plan has no Python eval node (the batch arrives as
+    a local relation). The executor-routed plan (small_queries=False)
+    still evaluates the routing UDF once, and so does a batch past one
+    Arrow batch, still broadcast below SMALL_QUERY_MAX and answering the
+    same rows."""
     cfg = AnnIndexConfig(kind="forest", n_trees=8, seed=42)
     idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
     qs = corpus.where(F.col("vec_id") < 100).select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
     )
-    assert qs.count() <= SMALL_QUERY_MAX
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    arrow_batch = spark.conf.get(key)
+    assert qs.count() <= int(arrow_batch)
     python_eval = {"ArrowEvalPython", "BatchEvalPython"}
+
+    def rows(df):
+        return sorted((r.qid, r.rank, r.nid, r.distance)
+                      for r in df.collect())
+
     idx.query(qs, k=5).collect()  # warm
     small = idx.query(qs, k=5)
     small.collect()
@@ -356,6 +367,17 @@ def test_small_batch_plan_runs_no_python_udf(spark, corpus, tmp_path):
     large = idx.query(qs, k=5, small_queries=False)
     large.collect()
     assert sum(n in python_eval for n in _plan_node_names(large)) == 1
+
+    spark.conf.set(key, "64")
+    try:
+        past = {s: idx.query(qs, k=5, small_queries=s) for s in (None, True)}
+        for pinned, df in past.items():
+            assert rows(df) == rows(small), pinned
+        names = _plan_node_names(past[None])
+    finally:
+        spark.conf.set(key, arrow_batch)
+    assert sum(n in python_eval for n in names) == 1
+    assert "BroadcastHashJoin" in names
 
 
 def test_load_rejects_old_format(spark, corpus, tmp_path):
@@ -498,8 +520,12 @@ def test_staged_append_repair_completes(spark, corpus, queries, tmp_path):
 
     with pytest.raises(ValueError, match="UNFINISHED"):
         load_index(spark, root)
+    idx._sizes.unpersist()  # a repair runs without the crashed process
     repaired = repair_append(spark, root)
     assert repaired.n_items() == 400
+    # no bucket passed bucket_cap, so nothing the repair built stays cached
+    assert not repaired._has_oversized
+    assert repaired._sizes.storageLevel == StorageLevel.NONE
     assert not (Path(root) / _PENDING).exists()
     assert not staging.exists()
     # repair is idempotent: a second call is a no-op load
